@@ -34,6 +34,21 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+# JavaUtils.byteStringAsBytes units: a bare number is bytes
+_BYTE_UNITS = {"b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2, "g": 3, "gb": 3,
+               "t": 4, "tb": 4, "p": 5, "pb": 5}
+
+
+def byte_string(value: str) -> int:
+    """Bytes in a Spark byte-string conf value: ``"128m"``, ``"1g"``,
+    ``"134217728b"`` or a bare ``"134217728"``."""
+    m = _re.fullmatch(r"([0-9]+)([a-z]+)?", value.strip().lower())
+    unit = m and (m.group(2) or "b")
+    if unit not in _BYTE_UNITS:
+        raise ValueError(f"not a Spark byte string: {value!r}")
+    return int(m.group(1)) * 1024 ** _BYTE_UNITS[unit]
+
+
 def load_fanout(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """``load`` plus scan fan-out for expensive map stages (guide §2.2/§6).
 
@@ -46,7 +61,9 @@ def load_fanout(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     columns once (KB–MB here) to buy N-way map parallelism.  Use for
     operators whose pre-shuffle per-row work dominates; plain ``load`` is
     cheaper for scan→aggregate queries where the first exchange already
-    spreads the work."""
+    spreads the work.  A path ``os.stat`` cannot size (s3/hdfs) is left as
+    scanned: such tables are split by the object store's listing, and a
+    blind repartition would be a full shuffle."""
     df = load(spark, sf_dir, name)
     p = spark.sparkContext.defaultParallelism
     # single-split detection from file bytes (an os.stat, not a .rdd
@@ -66,10 +83,9 @@ def load_fanout(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         else:
             nbytes = _os.path.getsize(path)
     except OSError:
-        return df.repartition(p)
-    max_split = int(
+        return df
+    max_split = byte_string(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        .removesuffix("b")
     )
     if nbytes < max_split:
         df = df.repartition(p)

@@ -37,29 +37,27 @@ sandbox ships no Iceberg/Delta jars (re-verified round 3: pyspark/jars has
 neither, no delta-spark/pyiceberg pip package, and no network to fetch
 them), so state tables are plain parquet snapshots per round + a JSON
 manifest, with MERGE semantics emulated by anti-join/union, atomicity by
-the write-then-flip-LATEST protocol, and concurrent-writer protection by
-the WRITER fencing token plus a LATEST-regression refusal at publish time
-(two engines on one workdir → the stale one aborts with
-ConcurrentWriterError; tests/test_concurrent_writers.py).  Snapshot TIME
-TRAVEL (≙ Iceberg rollback_to_snapshot) via ``resume(from_round=N)`` and
-keep-last-K retention (≙ expire_snapshots) via ``CrawlConfig.keep_rounds``
-close the remaining table-format gap (tests/test_time_travel.py).
-Swapping the store for Iceberg tables (MERGE INTO frontier/seen, snapshot
-ids in the manifest) changes only ``_write_snapshot``/``resume``.
+a write-then-flip-the-commit-point protocol, and concurrent-writer
+protection by a writer-lease fencing token plus a commit-point-regression
+refusal at publish time (two engines on one workdir → the stale one aborts
+with ConcurrentWriterError; tests/test_concurrent_writers.py).  Snapshot
+TIME TRAVEL (≙ Iceberg rollback_to_snapshot) via ``resume``'s
+``from_round`` and keep-last-K retention (≙ expire_snapshots) via
+``CrawlConfig.keep_rounds`` close the remaining table-format gap
+(tests/test_time_travel.py).  The engine decides what each commit holds;
+``plans/store.py`` owns the workdir layout and every file mutation of the
+protocol, so swapping the store for Iceberg tables (MERGE INTO
+frontier/seen, snapshot ids in the manifest) changes only ``store.py``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import pathlib
-import shutil
 import time
 from collections import defaultdict, deque
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-
-import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -82,16 +80,9 @@ from ..schemas import (
     STATUS_NEW,
     STATUS_QUEUED,
 )
+from .store import ConcurrentWriterError, ParquetDeltaLogStore
 
 __all__ = ["CrawlConfig", "CrawlEngine", "ConcurrentWriterError"]
-
-
-class ConcurrentWriterError(RuntimeError):
-    """A second engine took over this workdir (its WRITER fencing token
-    changed); the fenced-out writer must abort instead of committing a
-    split-brain snapshot (≙ the reference's single-writer postgres job table
-    guarded by SELECT ... FOR UPDATE SKIP LOCKED claims,
-    postgres/provider.go:148-244)."""
 
 _RESULT_COLS = [f.name for f in RESULT_SCHEMA.fields]
 
@@ -211,26 +202,16 @@ def _state_storage_level(spark: SparkSession):
     scan (each state table is scanned once per round) but keep the heap
     flat; with ``spark.memory.offHeap.enabled`` the blocks leave the heap
     entirely (``OFF_HEAP`` still spills to disk when the pool fills, so
-    nothing is ever recomputed — localCheckpoint has no lineage to replay).
-
-    ``GMS_STATE_STORAGE`` overrides for A/B: ``offheap`` | ``memdisk``
-    (serialized on-heap) | ``deser`` (the old default)."""
+    nothing is ever recomputed — localCheckpoint has no lineage to replay)."""
     from pyspark import StorageLevel
 
-    mode = os.environ.get("GMS_STATE_STORAGE", "auto").lower()
-    if mode == "deser":
-        return None  # localCheckpoint default (MEMORY_AND_DISK_DESER)
-    if mode == "memdisk":
-        return StorageLevel.MEMORY_AND_DISK
-    if mode != "offheap":  # auto
-        try:
-            if spark.conf.get(
-                "spark.memory.offHeap.enabled", "false"
-            ).lower() != "true":
-                return StorageLevel.MEMORY_AND_DISK
-        except Exception:
-            return StorageLevel.MEMORY_AND_DISK
-    return StorageLevel.OFF_HEAP
+    try:
+        off_heap = spark.conf.get("spark.memory.offHeap.enabled", "false")
+    except Exception:
+        off_heap = "false"
+    if off_heap.lower() == "true":
+        return StorageLevel.OFF_HEAP
+    return StorageLevel.MEMORY_AND_DISK
 
 
 class CrawlEngine:
@@ -245,18 +226,21 @@ class CrawlEngine:
         self,
         spark: SparkSession,
         pages: DataFrame,
-        workdir: str,
+        workdir: str | os.PathLike,
         config: CrawlConfig | None = None,
     ):
         self.spark = spark
         self.pages = pages
-        self.workdir = pathlib.Path(workdir)
+        # the durable delta log: every workdir path and file mutation of
+        # the commit protocol lives behind this one store
+        self._store = ParquetDeltaLogStore(spark, workdir)
         self.cfg = config or CrawlConfig()
         self.round = 0
         self._cum_claimed = 0
         self._cum_admitted = 0   # SERP fan-out candidates (observed n_links)
         self._durable_round = -1   # last round with a committed durable snapshot
-        self._writer_id = uuid.uuid4().hex  # fencing token (split-brain guard)
+        self._writer_id: str | None = None  # writer lease (split-brain guard),
+        # taken at seed/resume
         self._chain_pages = None   # lazily materialized review-RPC page
         # subset: every chain-hop fetch probes this instead of re-scanning
         # the full pages table (built once per run, on the first multi-hop
@@ -384,10 +368,8 @@ class CrawlEngine:
         # empty) must reach the durable term log like any other retirement
         self._term_since_durable = [self._frontier_done[0]]
         self.round = 0
-        if self.workdir.exists():
-            shutil.rmtree(self.workdir)
-        self.workdir.mkdir(parents=True, exist_ok=True)
-        self._stamp_writer()
+        self._store.reset()
+        self._writer_id = self._store.take_over()
         if self.cfg.checkpoint_every == 1:
             self._checkpoint()  # durable round-0 snapshot (resume-from-seed)
         else:
@@ -497,8 +479,8 @@ class CrawlEngine:
         terminal segments are immutable and never re-persisted, so a
         segment left as a parquet view would outlive its round directory
         when ``keep_rounds`` retention prunes it mid-run.  The finalize
-        re-root keeps the free view — commits stop there and LATEST is
-        never pruned."""
+        re-root keeps the free view — commits stop there and the commit
+        point is never pruned."""
         self._frontier = full.filter(F.col("status") == STATUS_NEW)
         done = full.filter(F.col("status") != STATUS_NEW)
         if materialize_done:
@@ -784,39 +766,12 @@ class CrawlEngine:
     # Counters ride the delta writes as Observations folded into the running
     # totals, so EVERY commit's manifest carries exact counters for free.
     #
-    # Split-brain fencing: the engine stamps workdir/WRITER with a per-run
-    # token at seed/resume; the snapshot writer re-checks the token right
-    # before the atomic publish and aborts with ConcurrentWriterError if a
-    # second engine took over (advisory — the flip itself stays atomic).
-
-    def _stamp_writer(self) -> None:
-        tmp = self.workdir / ".WRITER.tmp"
-        tmp.write_text(self._writer_id)
-        os.replace(tmp, self.workdir / "WRITER")
-
-    def _check_writer(self) -> None:
-        marker = self.workdir / "WRITER"
-        if marker.exists() and marker.read_text().strip() != self._writer_id:
-            raise ConcurrentWriterError(
-                f"workdir {self.workdir} was taken over by another engine; "
-                "aborting checkpoint (WRITER fencing token changed)"
-            )
-
-    @staticmethod
-    def _round_of(rel_path: str) -> int:
-        return int(rel_path.split("/", 1)[0].split("=")[1])
-
-    def _read_chain(self, rel_paths: list[str], schema) -> DataFrame:
-        """Union view over a manifest chain's immutable parquet delta dirs
-        (bounded legs: compaction caps chain length at cfg.compact_chain)."""
-        if not rel_paths:
-            return self.spark.createDataFrame([], schema)
-        df = self.spark.read.schema(schema).parquet(str(self.workdir / rel_paths[0]))
-        for p in rel_paths[1:]:
-            df = df.unionByName(
-                self.spark.read.schema(schema).parquet(str(self.workdir / p))
-            )
-        return df
+    # Split-brain fencing: the engine takes the store's writer lease at
+    # seed/resume; the store re-checks the lease (and that LATEST has not
+    # reached this round) when staging and right before the atomic publish,
+    # and aborts with ConcurrentWriterError if a second engine took over
+    # (advisory — the flip itself stays atomic).  The file-level steps all
+    # live in plans/store.py; this engine only decides what a commit holds.
 
     def _term_full(self) -> DataFrame:
         """Every terminal frontier row (segments + lazy deltas) — the
@@ -909,7 +864,6 @@ class CrawlEngine:
         join point applies."""
         from concurrent.futures import ThreadPoolExecutor
 
-        self._check_writer()
         # writer-owned chain state: seeded from the driver's durable view at
         # the first write after init/resume/sync-apply (no commits are in
         # flight at those points), then advanced per commit ON THIS THREAD —
@@ -919,12 +873,9 @@ class CrawlEngine:
             self._wlog = {k: list(v) for k, v in self._log.items()}
             self._wtotals = json.loads(json.dumps(self._totals))
             self._wparent = self._durable_round
+        store = self._store
         rnd = cap["round"]
-        rd = self.workdir / f"round={rnd:04d}"
-        tmp = self.workdir / f".tmp.round={rnd:04d}"
-        for stale in (tmp, rd):  # uncommitted leftovers from a crashed attempt
-            if stale.exists():
-                shutil.rmtree(stale)
+        store.stage(rnd, self._writer_id)
         keep = self.cfg.keep_rounds
         cutoff = rnd - max(int(keep), 2) + 1 if keep is not None else None
         n = self._state_partitions()
@@ -945,14 +896,14 @@ class CrawlEngine:
 
         actions: dict[str, str] = {}
         obs: dict[str, Observation] = {}
-        rel = {t: f"round={rnd:04d}/{t}" for t in ("seen", "results", "term")}
+        rel = {t: store.chain_leg(rnd, t) for t in ("seen", "results", "term")}
         for t in ("seen", "results", "term"):
             prev, deltas = self._wlog[t], cap["deltas"][t]
             grown = len(prev) + (1 if deltas else 0)
             compact = bool(prev) and (
                 grown > self.cfg.compact_chain
                 or (cutoff is not None
-                    and any(self._round_of(p) < cutoff for p in prev))
+                    and any(store.round_of(p) < cutoff for p in prev))
             )
             if compact:
                 df, parts = cap["full"][t], n
@@ -991,7 +942,7 @@ class CrawlEngine:
         def _one_write(w):
             name, df, parts = w
             t0 = time.perf_counter() if self.cfg.timing else 0.0
-            df.coalesce(parts).write.mode("overwrite").parquet(str(tmp / name))
+            store.write_table(rnd, name, df.coalesce(parts))
             if self.cfg.timing:
                 # per-table write wall (concurrent writers: these overlap each
                 # other, so the sum exceeds the snapshot_write phase wall)
@@ -1024,8 +975,6 @@ class CrawlEngine:
         wc["seen"] = totals["seen"]
         wc["results"] = totals["results"]
 
-        if bloom_bytes is not None:
-            (tmp / "bloom.bin").write_bytes(bloom_bytes)
         # snapshot summary (≙ Iceberg's snapshot parent-id + summary map):
         # per-table action taken this commit, rows appended by it, and the
         # chain depth — the per-partition lineage a monitoring/debug read
@@ -1054,30 +1003,10 @@ class CrawlEngine:
                 if bloom_bytes is not None else None
             ),
         }
-        (tmp / "manifest.json").write_text(json.dumps(manifest, indent=2))
-        self._check_writer()      # fencing: re-verify right before commit
-        # lineage-regression guard (narrows the residual check-then-act
-        # window of the advisory WRITER fencing, round-3 ADVICE): if LATEST
-        # already reached this round number, a takeover writer committed a
-        # divergent lineage while this snapshot was being written —
-        # publishing would regress LATEST onto stale state.  Refuse.
-        latest_p = self.workdir / "LATEST"
-        if latest_p.exists():
-            try:
-                committed = int(latest_p.read_text().strip())
-            except ValueError:
-                committed = -1
-            if committed >= rnd:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise ConcurrentWriterError(
-                    f"LATEST={committed} already covers round {rnd}; another "
-                    "writer committed a divergent lineage — refusing to "
-                    "regress the commit point"
-                )
-        os.replace(tmp, rd)       # atomic publish
-        latest_tmp = self.workdir / ".LATEST.tmp"
-        latest_tmp.write_text(str(rnd))
-        os.replace(latest_tmp, self.workdir / "LATEST")
+        # fencing + lineage-regression guard, then the atomic publish and
+        # the LATEST flip (the store refuses if a takeover writer committed
+        # a divergent lineage while this snapshot was being written)
+        store.publish(rnd, manifest, self._writer_id, bloom_bytes)
         # retention (keep-last-K): prune round dirs older than the window
         # unless the NEW chain still references them (the compaction trigger
         # above makes the new chain self-contained within the window, so the
@@ -1085,14 +1014,7 @@ class CrawlEngine:
         # the commit point; the writes above already consumed any parquet the
         # captured deltas referenced, so pruning here cannot starve them.
         if cutoff is not None:
-            referenced = {self._round_of(p) for ps in log.values() for p in ps}
-            for d in sorted(self.workdir.glob("round=*")):
-                try:
-                    r_old = int(d.name.split("=")[1])
-                except ValueError:
-                    continue
-                if r_old < cutoff and r_old not in referenced:
-                    shutil.rmtree(d, ignore_errors=True)
+            store.prune(cutoff, {store.round_of(p) for ps in log.values() for p in ps})
         # advance the writer-owned chain state for the NEXT queued commit
         self._wlog = {t: list(v) for t, v in log.items()}
         self._wtotals = json.loads(json.dumps(totals))
@@ -1160,7 +1082,9 @@ class CrawlEngine:
         self._results_new = self._results_new[m["results"]:]
         for t in ("seen", "results", "term"):
             self._cap_heads[t] -= m[t]
-        self._results_base = self._read_chain(rec["log"]["results"], RESULT_SCHEMA)
+        self._results_base = self._store.read_chain(
+            rec["log"]["results"], RESULT_SCHEMA
+        )
         self._rebuild_results_view()
 
     def _drain_done_checkpoints(self) -> None:
@@ -1185,23 +1109,20 @@ class CrawlEngine:
         commit, then re-root ALL state at the committed chain (metadata-only
         parquet reads for any later consumer; lineage fully truncated).
         Commits stop here, so chain-parquet views cannot dangle under
-        retention — LATEST is never pruned."""
+        retention — the commit point is never pruned."""
         self._join_pending_checkpoint()
         rec = self._write_snapshot(
             self._capture_commit(),
             self._bloom.to_bytes() if self._bloom is not None else None,
         )
         self._apply_commit(rec)
-        rd = self.workdir / f"round={rec['round']:04d}"
         # the live table holds exactly the NEW rows; terminal segments keep
         # their existing materialized blocks (block-backed segments cannot
         # dangle if a later resume's retention prunes this round dir)
-        self._frontier = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-            str(rd / "frontier")
-        )
+        self._frontier = self._store.read_frontier(rec["round"])
         self._live_parquet_rooted = True
         self._pending_term = None
-        self._seen_segs = [self._read_chain(rec["log"]["seen"], SEEN_SCHEMA)]
+        self._seen_segs = [self._store.read_chain(rec["log"]["seen"], SEEN_SCHEMA)]
         self._seen_since_durable = []
         self._rebuild_seen_view()
 
@@ -1210,44 +1131,43 @@ class CrawlEngine:
         cls,
         spark: SparkSession,
         pages: DataFrame,
-        workdir: str,
+        workdir: str | os.PathLike,
         config: CrawlConfig | None = None,
         from_round: int | None = None,
     ) -> "CrawlEngine":
-        """Resume from the latest committed round manifest (kill-safe: a
-        partially written round directory is ignored until LATEST points at
-        it, and LATEST is written last).
+        """Resume from the store's commit point (kill-safe: a partially
+        written round is ignored until the commit point names it, and the
+        commit point moves last).
 
         ``from_round`` is snapshot TIME TRAVEL (≙ Iceberg
         ``rollback_to_snapshot``): resume from any RETAINED older round.
         Rounds newer than the target are a now-divergent lineage — they are
-        pruned and LATEST is rewound to the target before any new work, so
-        later commits (target+1, ...) replay forward deterministically and
-        the LATEST-regression fencing guard stays monotonic."""
-        from .store import ParquetDeltaLogStore
-
+        pruned and the commit point is rewound to the target before any new
+        work, so later commits (target+1, ...) replay forward
+        deterministically and the commit-point-regression fencing guard
+        stays monotonic."""
         eng = cls(spark, pages, workdir, config)
-        eng._stamp_writer()  # take over: fences out any still-live old writer
-        latest = int((eng.workdir / "LATEST").read_text().strip())
+        store = eng._store
+        # take over: fences out any still-live old writer
+        eng._writer_id = store.take_over()
         if from_round is not None:
-            # rollback semantics live on the store seam (plans/store.py ≙
-            # Iceberg manageSnapshots().rollbackTo) — one implementation,
-            # contract-tested in tests/test_store_contract.py
-            ParquetDeltaLogStore(spark, eng.workdir).rollback_to(from_round)
-            latest = from_round
-        rd = eng.workdir / f"round={latest:04d}"
-        manifest = json.loads((rd / "manifest.json").read_text())
+            # rollback semantics live on the store (≙ Iceberg
+            # manageSnapshots().rollbackTo), contract-tested in
+            # tests/test_store_contract.py
+            store.rollback_to(from_round)
+        latest = store.current()
+        if latest is None:
+            raise ValueError(f"{workdir} has no committed snapshot to resume")
+        manifest = store.manifest(latest)
         eng.round = manifest["round"]
         chain = manifest["chain"]
-        for t, paths in chain.items():
-            for p in paths:
-                if not (eng.workdir / p).exists():
-                    raise ValueError(
-                        f"round {latest}'s {t} chain references {p}, which "
-                        "retention has pruned — this snapshot is no longer "
-                        "resumable (pick a newer round or disable keep_rounds)"
-                    )
-        restored = spark.read.schema(FRONTIER_SCHEMA).parquet(str(rd / "frontier"))
+        if not store.is_resumable(latest):
+            raise ValueError(
+                f"round {latest}'s chain references a delta dir which "
+                "retention has pruned — this snapshot is no longer "
+                "resumable (pick a newer round or disable keep_rounds)"
+            )
+        restored = store.read_frontier(latest)
         denied = None
         if eng.cfg.robots:
             # robots rules may differ from the run that wrote this snapshot
@@ -1278,7 +1198,7 @@ class CrawlEngine:
                 return df
             return eng._ckpt(df.coalesce(n))
 
-        eng._frontier_done = [_root(eng._read_chain(chain["term"], FRONTIER_SCHEMA))]
+        eng._frontier_done = [_root(store.read_chain(chain["term"], FRONTIER_SCHEMA))]
         eng._pending_term = None
         eng._term_lazy = []
         eng._term_lazy_rows = 0
@@ -1294,22 +1214,21 @@ class CrawlEngine:
                 eng._ckpt(eng._frontier.coalesce(n))
             )
             eng._live_parquet_rooted = False
-        eng._seen_segs = [_root(eng._read_chain(chain["seen"], SEEN_SCHEMA))]
+        eng._seen_segs = [_root(store.read_chain(chain["seen"], SEEN_SCHEMA))]
         eng._seen_since_durable = []
         eng._rebuild_seen_view()
-        eng._results_base = eng._read_chain(chain["results"], RESULT_SCHEMA)
+        eng._results_base = store.read_chain(chain["results"], RESULT_SCHEMA)
         eng._results_new = []
         eng._rebuild_results_view()
         eng._log = {t: list(p) for t, p in chain.items()}
         eng._totals = manifest["totals"]
         eng._durable_round = eng.round
-        if manifest.get("bloom") and (rd / "bloom.bin").exists():
+        bloom_bytes = store.bloom(latest) if manifest.get("bloom") else None
+        if bloom_bytes is not None:
             from ..operators.bloom import BloomFilter
 
             b = manifest["bloom"]
-            eng._bloom = BloomFilter(
-                b["m_bits"], b["k"], (rd / "bloom.bin").read_bytes()
-            )
+            eng._bloom = BloomFilter(b["m_bits"], b["k"], bloom_bytes)
         elif eng._bloom is not None:
             # seen_bloom requested but the snapshot has no persisted filter
             # (e.g. the prior run had seen_bloom=False).  A fresh empty Bloom
@@ -2061,23 +1980,14 @@ class CrawlEngine:
     def finalize(self) -> None:
         """Public commit seam (used by jobs-mode and run()): join any
         in-flight overlapped snapshot, then ensure the CURRENT round has a
-        committed durable snapshot with final counters in its manifest.
-        Skipped when the final round's write already committed — a second
-        overwrite would target the very parquet dirs the re-rooted state
-        DataFrames are reading and destroy the last checkpoint."""
+        committed durable snapshot (every manifest carries its
+        write-observed counters).  Skipped when the final round's write
+        already committed — a second overwrite would target the very
+        parquet dirs the re-rooted state DataFrames are reading and destroy
+        the last checkpoint."""
         self._join_pending_checkpoint()
         if self._durable_round != self.round:
             self._checkpoint()
-            return
-        # final round's overlapped write already committed: backfill the
-        # manifest's counters (mid-run manifests carry null by design)
-        rd = self.workdir / f"round={self.round:04d}"
-        mpath = rd / "manifest.json"
-        if mpath.exists():
-            manifest = json.loads(mpath.read_text())
-            if manifest.get("counters") is None:
-                manifest["counters"] = self.counters()
-                mpath.write_text(json.dumps(manifest, indent=2))
 
     # ---------------- outputs -------------------------------------------------
 

@@ -73,3 +73,31 @@ def test_sequential_resume_still_allowed(spark, tmp_path_factory):
     counters = b.run()
     assert counters["results"] > 0
     assert b._durable_round == b.round
+
+
+def test_commit_keeps_round_a_rival_committed(spark, tmp_path_factory):
+    """A round dir LATEST already covers belongs to a rival's committed
+    lineage: the engine's next commit must refuse BEFORE touching it (the
+    old engine removed any existing round dir unchecked, then refused)."""
+    import pathlib
+    import shutil
+
+    corpus = generate_corpus(n_seeds=2, places_per_serp=4, seed=7)
+    pages = corpus_to_spark(spark, corpus).localCheckpoint(eager=True)
+    seeds = [(s["query"].split("#!#")[0].strip(), s["custom_id"]) for s in corpus.seeds]
+    wd = pathlib.Path(tmp_path_factory.mktemp("rival-round"))
+    cfg = CrawlConfig(extract_email=False, now_micros=NOW)
+
+    a = CrawlEngine(spark, pages, str(wd), cfg)
+    a.seed_from_queries(seeds)
+    a.run_round()
+    a._join_pending_checkpoint()  # round 1 durably committed
+    # stand-in for a rival that committed round 2
+    shutil.copytree(wd / "round=0001", wd / "round=0002")
+    (wd / "LATEST").write_text("2")
+
+    a.run_round()
+    with pytest.raises(ConcurrentWriterError):
+        a.finalize()
+    assert (wd / "round=0002" / "manifest.json").exists()
+    assert (wd / "LATEST").read_text() == "2"

@@ -33,21 +33,19 @@ def pages_and_seeds(spark):
     return pages, _seeds(corpus)
 
 
-def test_level_selection(spark, monkeypatch):
+def test_level_selection(spark):
+    from types import SimpleNamespace
+
     from pyspark import StorageLevel
 
-    # the test session runs without spark.memory.offHeap.enabled, so auto
-    # must pick serialized ON-HEAP (OFF_HEAP blocks need the off-heap pool)
-    monkeypatch.delenv("GMS_STATE_STORAGE", raising=False)
+    # the test session runs without spark.memory.offHeap.enabled, so the
+    # engine must pick serialized ON-HEAP (OFF_HEAP blocks need the pool)
     assert _state_storage_level(spark) == StorageLevel.MEMORY_AND_DISK
-
-    monkeypatch.setenv("GMS_STATE_STORAGE", "offheap")
-    assert _state_storage_level(spark) == StorageLevel.OFF_HEAP
-    monkeypatch.setenv("GMS_STATE_STORAGE", "memdisk")
-    assert _state_storage_level(spark) == StorageLevel.MEMORY_AND_DISK
-    # deser = localCheckpoint's own default (None passes through)
-    monkeypatch.setenv("GMS_STATE_STORAGE", "deser")
-    assert _state_storage_level(spark) is None
+    # with the pool enabled the blocks leave the heap entirely (a static
+    # conf the shared test session cannot flip, so a stub session)
+    conf = {"spark.memory.offHeap.enabled": "true"}
+    stub = SimpleNamespace(conf=SimpleNamespace(get=lambda k, d=None: conf.get(k, d)))
+    assert _state_storage_level(stub) == StorageLevel.OFF_HEAP
 
 
 def test_serialized_state_byte_identical(
@@ -55,11 +53,15 @@ def test_serialized_state_byte_identical(
 ):
     """The storage level is an executor-memory policy, not a semantic: a
     full email crawl must produce identical results and counters under the
-    deserialized default and the serialized policy."""
+    on-heap and the off-heap serialized levels the engine selects between
+    (without an off-heap pool, OFF_HEAP blocks land on disk)."""
+    import google_maps_scraper_spark.plans.crawl as crawl_mod
+    from pyspark import StorageLevel
+
     pages, seeds = pages_and_seeds
 
-    def _run(mode, wd):
-        monkeypatch.setenv("GMS_STATE_STORAGE", mode)
+    def _run(level, wd):
+        monkeypatch.setattr(crawl_mod, "_state_storage_level", lambda _s: level)
         eng = CrawlEngine(
             spark, pages, str(wd),
             CrawlConfig(extract_email=True, now_micros=NOW, checkpoint_every=1),
@@ -72,8 +74,8 @@ def test_serialized_state_byte_identical(
         }
         return counters, rows
 
-    c_deser, r_deser = _run("deser", tmp_path_factory.mktemp("wd-deser"))
-    c_ser, r_ser = _run("memdisk", tmp_path_factory.mktemp("wd-ser"))
-    assert c_deser == c_ser
-    assert r_deser == r_ser
-    assert len(r_ser) > 0
+    c_on, r_on = _run(StorageLevel.MEMORY_AND_DISK, tmp_path_factory.mktemp("wd-on"))
+    c_off, r_off = _run(StorageLevel.OFF_HEAP, tmp_path_factory.mktemp("wd-off"))
+    assert c_on == c_off
+    assert r_on == r_off
+    assert len(r_off) > 0
